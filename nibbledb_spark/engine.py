@@ -2,30 +2,32 @@
 
 Replaces the reference's Irmin/Git shard + index machinery
 (src/shard.re, src/index.re, SURVEY.md §1.3) with a Spark-native
-layout:
+layout on the snapshot log (``snapshots.SnapshotLog``):
 
-- one parquet dataset partitioned by ``bucket = pmod(xxhash64(series), B)``
-  — bounded partition count regardless of series cardinality (the 100 TB
-  stance: raw ``partitionBy(series)`` explodes with millions of series),
+- the points store is one log table of parquet files partitioned by
+  ``bucket = pmod(xxhash64(series), B)`` and ``day`` — bounded file
+  count regardless of series cardinality (the 100 TB stance: raw
+  ``partitionBy(series)`` explodes with millions of series),
 - rows sorted within files by (series, ts) at write so parquet row-group
   min/max statistics give the same pruning the reference's hand-rolled
-  shard-range index provides (src/index.re:92-105) — maintained by the
-  format, not by us,
-- the "shard index" observability endpoint (A29) is derived from
-  file-level footer stats via a manifest query, not a second store.
+  shard-range index provides (src/index.re:92-105),
+- every write is one atomic commit, as every shard write is a Git commit
+  in the reference (src/shard.re:26-34); delete and compact swap the
+  affected buckets' rewritten files in one commit across all of them,
+- a read scans one snapshot's file list, pruned by each file's bucket
+  and ts stats; the series/ts filters stay on the plan for row-group
+  pushdown. Each rollup width is its own log table.
 
-Mutation model: append for ingest; delete/compact rewrite only the
-affected buckets via a STAGED SWAP (write survivors to a sibling staging
-dir, then flip each bucket directory with atomic FS renames — see
-_staged_swap) — the Spark equivalent of the reference's shard rewrite
-(src/timeseries.re:259-303), with per-bucket atomicity standing in for
-Irmin's transactional store. Like the reference, ingest never
-deduplicates (quirk Q6).
+Like the reference, ingest never deduplicates (quirk Q6).
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import threading
+import uuid
 from collections.abc import Sequence
 from typing import Any
 
@@ -35,31 +37,19 @@ from pyspark.sql import types as T
 
 from nibbledb_spark.operators import timeseries as ts_ops
 from nibbledb_spark.schema import POINT_SCHEMA, validate_points
+from nibbledb_spark.snapshots import SnapshotLog, _unlink_data_file
 
 DEFAULT_NUM_BUCKETS = 32
 
 # µs per day; the `day` partition column is ts div DAY_US (days since
-# epoch). Two-level layout bucket=N/day=M: series-hash bounds the
-# partition count in one dimension, day gives DIRECTORY-level time
-# pruning that survives compaction — after merging a bucket into few
-# files, row-group ts stats alone would cover the whole history, but the
-# day dirs keep range scans proportional to the window queried. This is
-# the scale analogue of the reference's shard-range index
-# (src/index.re:92-105): maintained by the layout, consulted by Catalyst
-# partition pruning, no second store.
+# epoch). Files are written per bucket=N/day=M: series-hash bounds the
+# file count in one dimension, and day keeps each file's ts range within
+# one day, so the manifest's per-file ts stats prune range scans to the
+# window queried even after compaction merged a bucket's history. This
+# is the scale analogue of the reference's shard-range index
+# (src/index.re:92-105): maintained by the layout, consulted from the
+# manifest, no second store.
 DAY_US = 86_400_000_000
-
-# on-disk layout: point columns + the partition columns. Reads use this
-# schema explicitly so an empty (or fully-deleted) store is a valid
-# empty DataFrame instead of an inference error.
-STORE_SCHEMA = T.StructType(
-    list(POINT_SCHEMA.fields)
-    + [T.StructField("bucket", T.IntegerType()), T.StructField("day", T.IntegerType())]
-)
-
-# layout v2 = bucket/day two-level partitioning; v1 stores (bucket only)
-# are not silently mixed — the store's meta pins its layout.
-STORE_LAYOUT = 2
 
 # Continuous-aggregate rollup (the hypertable-rollup analogue): per
 # (series, time bucket) mergeable partials. Sums are scaled longs
@@ -90,7 +80,7 @@ def day_of(ts_col):
 
 
 class TimeSeriesEngine:
-    """Batch engine over a bucket-partitioned parquet points store."""
+    """Batch engine over a bucket-partitioned, log-backed points store."""
 
     def __init__(
         self,
@@ -105,28 +95,26 @@ class TimeSeriesEngine:
         self.num_buckets = num_buckets
         self.strict_ingest = strict_ingest
         self._bucket_cache: dict[str, int] = {}
+        present = os.listdir(path) if os.path.isdir(path) else []
+        if "_log" not in present and any(n.startswith("bucket=") for n in present):
+            raise ValueError(f"{path} holds bucket directories but no snapshot log")
         # A store written with B buckets MUST be read with B buckets or
         # bucket pruning silently misses data: the store's own metadata
-        # wins over the constructor argument. Same for the partition
-        # layout version (a v1 bucket-only store must not be read or
-        # appended with day-partition assumptions).
-        meta = self._read_meta()
-        if meta is not None:
-            stored = meta.get("num_buckets")
-            if stored is not None and stored != num_buckets:
-                self.num_buckets = int(stored)
-            self.layout = int(meta.get("layout", 1))
-            widths = meta.get("rollup_widths")
-            if widths is None and meta.get("rollup_every_us"):
-                widths = [meta["rollup_every_us"]]  # pre-multi-width meta
-            self.rollup_widths: list[int] = sorted(int(x) for x in (widths or []))
-            self.retention_floor_us: int = int(meta.get("retention_floor_us", 0))
-        else:
-            self.layout = STORE_LAYOUT
-            self.rollup_widths = []
-            self.retention_floor_us = 0
-        # heal any bucket swap interrupted by a crash (see _staged_swap)
-        self._recover_staged_swap()
+        # wins over the constructor argument.
+        meta = self._read_meta() or {}
+        self.num_buckets = int(meta.get("num_buckets", num_buckets))
+        self.rollup_widths: list[int] = sorted(
+            int(x) for x in meta.get("rollup_widths", [])
+        )
+        self.retention_floor_us: int = int(meta.get("retention_floor_us", 0))
+        self._log = SnapshotLog(
+            spark, path, stats_cols=("ts",), partition_cols=("bucket", "day")
+        )
+        # snapshot reads in flight, and the replaced files waiting for
+        # them to finish (see reading)
+        self._reads = 0
+        self._retired: list[str] = []
+        self._reads_lock = threading.Lock()
 
     @property
     def rollup_every_us(self) -> int | None:
@@ -142,27 +130,63 @@ class TimeSeriesEngine:
     def _read_meta(self) -> dict | None:
         try:
             with open(self._meta_path()) as f:
-                import json
-
                 return dict(json.load(f))
         except (OSError, ValueError):
             return None
 
     def _write_meta(self, *, force: bool = False) -> None:
-        if force or not os.path.exists(self._meta_path()):
-            os.makedirs(self.path, exist_ok=True)
-            import json
+        """Stamp the store's properties. tmp + fsync + rename, so a
+        failed write leaves the previous file whole, never truncated."""
+        if not force and os.path.exists(self._meta_path()):
+            return
+        meta: dict = {"num_buckets": self.num_buckets}
+        if self.rollup_widths:
+            meta["rollup_widths"] = self.rollup_widths
+        if self.retention_floor_us:
+            meta["retention_floor_us"] = self.retention_floor_us
+        tmp = f"{self._meta_path()}.tmp-{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(meta, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._meta_path())
 
-            meta: dict = {"num_buckets": self.num_buckets, "layout": self.layout}
-            if self.rollup_widths:
-                meta["rollup_widths"] = self.rollup_widths
-            if self.retention_floor_us:
-                meta["retention_floor_us"] = self.retention_floor_us
-            with open(self._meta_path(), "w") as f:
-                json.dump(meta, f)
+    # -- snapshot reads and file reclaim -------------------------------------
 
-    def _partition_cols(self) -> list[str]:
-        return ["bucket", "day"] if self.layout >= 2 else ["bucket"]
+    @contextlib.contextmanager
+    def reading(self):
+        """Hold around a read's plan AND collect: files a rewrite
+        replaced are unlinked only once no holder is left, so a read
+        that resolved an older snapshot still finds its files."""
+        with self._reads_lock:
+            self._reads += 1
+        try:
+            yield
+        finally:
+            with self._reads_lock:
+                self._reads -= 1
+                doomed = [] if self._reads else self._retired
+                if not self._reads:
+                    self._retired = []
+            for p in doomed:
+                _unlink_data_file(p)
+
+    def _retire(self, log: SnapshotLog, files) -> None:
+        # exactly the paths our own commit removed: a directory sweep
+        # could take a concurrent writer's not-yet-committed files
+        with self._reads_lock:
+            self._retired += [os.path.join(log.root, fe.path) for fe in files]
+
+    def _scan(self, log: SnapshotLog, schema: T.StructType, files) -> DataFrame:
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(log.root, fe.path) for fe in files]
+        )
+
+    def _partitioned(self, df: DataFrame) -> DataFrame:
+        bucket = bucket_of(F.col("series"), self.num_buckets)
+        return df.withColumns({"bucket": bucket, "day": day_of(F.col("ts"))})
 
     # -- write path --------------------------------------------------------
 
@@ -183,80 +207,87 @@ class TimeSeriesEngine:
         return len(rows)
 
     def append_points(self, df: DataFrame) -> None:
-        """Append canonical-schema points. Sorted within partitions by
-        (series, ts) so row-group stats stay tight for time pruning; the
-        day partition column gives directory-level time pruning on top
-        (see DAY_US). First write stamps the store's bucket-count +
-        layout metadata (underscore prefix keeps it invisible to Spark's
-        file listing; swap the open() for the Hadoop FS API on a
-        non-local store)."""
-        self._write_meta()
-        out = df.withColumn("bucket", bucket_of(F.col("series"), self.num_buckets))
-        if self.layout >= 2:
-            out = out.withColumn("day", day_of(F.col("ts")))
+        """Append canonical-schema points as one commit per table (the
+        points table, plus one per rollup width). Sorted within files by
+        (series, ts) so row-group stats stay tight for time pruning;
+        one file per (bucket, day) per writing task. The first write
+        stamps the store's bucket-count metadata."""
+        self._append(df)
 
-        def _write_main(src: DataFrame) -> None:
-            (
-                src.repartition("bucket")
-                .sortWithinPartitions("series", "ts")
-                .write.mode("append")
-                .partitionBy(*self._partition_cols())
-                .parquet(self.path)
+    def streaming_sink(self, stream_id: str):
+        """``foreachBatch`` handler appending each micro-batch exactly
+        once, with ``SnapshotLog.streaming_sink``'s marker: a table skips
+        a batch id at or below its newest committed one for
+        ``stream_id`` (one id per checkpoint location)."""
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            self._append(
+                batch_df, {"stream_batch_id": int(batch_id), "stream_id": stream_id}
             )
 
-        if not self.rollup_widths:
-            _write_main(out)
-            return
-        # With rollups enabled the input would otherwise be scanned
-        # 1 + len(widths) times (main write + one partial-agg per
-        # width, sequentially). Scan it ONCE into a cache, then run
-        # the independent writes overlapped so stragglers back-fill
-        # (the _lsh_write_tables pattern); coarser widths derive from
-        # the finest width's partials where they nest — at 100 TB the
-        # day rollup aggregates ~24 partial rows per bucket instead of
-        # re-scanning the raw points. Measured 3 appends 9.6 s ->
-        # ~5 s at sf0.1 (r15 opt).
-        from concurrent.futures import ThreadPoolExecutor
+        return sink
 
-        out = out.persist()
-        try:
+    def _append(self, df: DataFrame, marker: dict | None = None) -> None:
+        self._write_meta()
+        out = self._partitioned(df)
+        base = None
+        if self.rollup_widths:
+            # With rollups enabled the input would otherwise be scanned
+            # 1 + len(widths) times (main write + one partial-agg per
+            # width). Scan it ONCE into a cache, then write the tables
+            # overlapped so stragglers back-fill (the _lsh_write_tables
+            # pattern); coarser widths derive from the finest width's
+            # partials where they nest — at 100 TB the day rollup
+            # aggregates ~24 partial rows per bucket instead of
+            # re-scanning the raw points. Measured 3 appends 9.6 s ->
+            # ~5 s at sf0.1 (r15 opt). No eager count(): concurrent
+            # writers dedupe the cache fill per partition, so the first
+            # job to need a block computes it and the rest reuse.
+            out = out.persist()
             pts = out.select("series", "ts", "value")
-            widths = sorted(self.rollup_widths)
-            finest = widths[0]
-            # No eager count(): concurrent writers dedupe the cache fill
-            # per partition (BlockManager getOrElseUpdate locks), so the
-            # first job to need a block computes it and the rest reuse —
-            # two fewer job launches per append.
+            finest = self.rollup_widths[0]
             base = self._rollup_partials(pts, finest).persist()
-            try:
-                jobs = [lambda: _write_main(out)]
+        main = out.repartition("bucket").sortWithinPartitions("series", "ts")
+        jobs = [(self._log, main)]
+        for every in self.rollup_widths:
+            if every == finest:
+                frame = base
+            elif every % finest == 0:
+                frame = self._rollup_merge_partials(base, every)
+            else:
+                frame = self._rollup_partials(pts, every)
+            jobs.append((self._rollup_log(every), frame))
+        if marker:  # a re-run micro-batch skips the tables that hold it
+            jobs = [j for j in jobs if not j[0]._replayed(marker)]
 
-                def _write_width(every: int) -> None:
-                    src = (
-                        self._rollup_merge_partials(base, every)
-                        if every != finest and every % finest == 0
-                        else (base if every == finest
-                              else self._rollup_partials(pts, every))
-                    )
-                    src.write.mode("append").parquet(self._rollup_dir(every))
+        def write(job) -> list:
+            log, frame = job
+            return log._write_files(frame, optimize=log is not self._log)
 
-                for every in widths:
-                    jobs.append(lambda e=every: _write_width(e))
+        try:
+            if len(jobs) > 1:
+                from concurrent.futures import ThreadPoolExecutor
+
                 with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-                    futures = [pool.submit(j) for j in jobs]
-                    for f in futures:
-                        f.result()
-            finally:
-                base.unpersist()
+                    adds = list(pool.map(write, jobs))
+            else:  # inline: keeps the caller's thread-local job group
+                adds = [write(j) for j in jobs]
         finally:
-            out.unpersist()
+            if base is not None:
+                base.unpersist()
+                out.unpersist()
+        for (log, _), add in zip(jobs, adds):
+            log._commit(
+                "append",
+                add,
+                [],
+                None,  # reads pin POINT_SCHEMA / ROLLUP_SCHEMA themselves
+                {"rows": sum(a.rows for a in add), **(marker or {})},
+                expected_version=None,
+                retry_append=True,
+            )
 
     # -- read path ---------------------------------------------------------
-
-    def _store(self) -> DataFrame:
-        """The raw store (with bucket column), schema-explicit so an
-        empty or fully-deleted store reads as an empty DataFrame."""
-        return self.spark.read.schema(STORE_SCHEMA).parquet(self.path)
 
     def points(
         self,
@@ -266,33 +297,21 @@ class TimeSeriesEngine:
         ts_to: int | None = None,
     ) -> DataFrame:
         """The unified points DataFrame, optionally restricted to series
-        ids and/or a time window. The bucket predicate is derived from
-        the ids and the day predicate from the ts bounds, so Catalyst
-        partition-prunes BOTH dimensions to only the relevant
-        directories before any file is opened."""
-        if not os.path.exists(self.path):
-            df = self.spark.createDataFrame([], POINT_SCHEMA)
-            if ts_from is not None:
-                df = df.where(F.col("ts") >= ts_from)
-            if ts_to is not None:
-                df = df.where(F.col("ts") <= ts_to)
-            return df
-        df = self._store()
+        ids and/or a time window. The file list comes from one snapshot,
+        pruned to the ids' buckets and the window before any file is
+        opened."""
+        files = self._log.files(bounds={"ts": (ts_from, ts_to)})
         if ids:
-            buckets = sorted(
-                {self._bucket_py(series_id) for series_id in ids}
-            )
-            df = df.where(F.col("bucket").isin(buckets))
+            buckets = {self._bucket_py(series_id) for series_id in ids}
+            files = [fe for fe in files if fe.stats["bucket"][0] in buckets]
+        df = self._scan(self._log, POINT_SCHEMA, files)
+        if ids:
             df = df.where(F.col("series").isin(list(ids)))
         if ts_from is not None:
-            if self.layout >= 2:
-                df = df.where(F.col("day") >= ts_from // DAY_US)
             df = df.where(F.col("ts") >= ts_from)
         if ts_to is not None:
-            if self.layout >= 2:
-                df = df.where(F.col("day") <= ts_to // DAY_US)
             df = df.where(F.col("ts") <= ts_to)
-        return df.select("series", "ts", "tag", "value")
+        return df
 
     def _bucket_py(self, series_id: str) -> int:
         # one tiny driver-side round-trip per distinct NEW id (memoized
@@ -429,130 +448,77 @@ class TimeSeriesEngine:
     ) -> None:
         """Precise predicate delete (default), or the reference's
         timestamp-membership over-delete under ``compat_membership``
-        (quirk Q2). Rewrites only the buckets containing listed series."""
-        if not os.path.exists(self.path):
-            # nothing flushed yet: deleting nonexistent series is 200 OK in
-            # the reference, not a crash (mirror points()'s guard)
-            return
+        (quirk Q2). Rewrites every live file of the buckets containing
+        listed series (all buckets when ``ids`` is empty), as one commit
+        — the Spark equivalent of the reference's shard rewrite
+        (src/timeseries.re:259-303)."""
         pred = ts_ops.delete_predicate(
             ids, ts_from, ts_to, tag_names, tag_values, tag_mode
         )
-        buckets = sorted({self._bucket_py(s) for s in ids}) if ids else None
+        with self.reading():
+            head = self._log.latest_version()
+            if head is None:
+                # nothing flushed yet: deleting nonexistent series is 200
+                # OK in the reference, not a crash
+                return
+            files = self._log.files(head)
+            if ids:
+                buckets = {self._bucket_py(s) for s in ids}
+                files = [fe for fe in files if fe.stats["bucket"][0] in buckets]
+            if not files:
+                return
+            affected = self._scan(self._log, POINT_SCHEMA, files)
+            if compat_membership:
+                victims = affected.where(pred).select("series", "ts").distinct()
+                survivors = affected.join(victims, ["series", "ts"], "left_anti")
+            else:
+                survivors = affected.where(~pred | pred.isNull())
+            out = self._partitioned(survivors).repartition("bucket")
+            self._rewrite("delete", head, files, out)
+            # rollup partials for the deleted rows can't be subtracted
+            # (min/max aren't invertible): refresh the derived table
+            self.rollup_rebuild()
 
-        store = self._store()
-        affected = store.where(F.col("bucket").isin(buckets)) if buckets else store
-
-        if compat_membership:
-            victims = (
-                affected.where(pred).select("series", "ts").distinct()
-            )
-            survivors = affected.join(victims, ["series", "ts"], "left_anti")
-        else:
-            survivors = affected.where(~pred | pred.isNull())
-
-        # The staged swap never reads and overwrites the same path: compute
-        # which buckets the rewrite touches, write survivors to a sibling
-        # staging dir, then flip bucket directories with atomic renames.
-        affected_buckets = (
-            set(buckets)
-            if buckets is not None
-            else {r["bucket"] for r in store.select("bucket").distinct().collect()}
+    def _rewrite(self, op: str, head: int, files, out: DataFrame) -> None:
+        """Write ``out`` — the new contents of ``files``, read at
+        ``head`` — and swap it in for them with one commit. The commit
+        rebases over concurrent appends, so a flush that lands while the
+        rewrite runs stays live; a concurrent rewrite raises
+        ``CommitConflict`` and nothing changes."""
+        add = self._log._write_files(
+            out.sortWithinPartitions("series", "ts"), optimize=False
         )
-        out = survivors.repartition("bucket").sortWithinPartitions("series", "ts")
-        self._staged_swap(out, affected_buckets)
-        # rollup partials for the deleted rows can't be subtracted
-        # (min/max aren't invertible): refresh the derived table
-        self.rollup_rebuild()
-
-    # -- staged bucket swap (durability) ------------------------------------
-    # The reference's Irmin store commits shard rewrites transactionally
-    # (src/shard.re:26-34). A plain-parquet overwrite of the path being
-    # lazily read is NOT that: a mid-commit failure can lose surviving rows
-    # of rewritten buckets. The staged protocol restores per-bucket
-    # atomicity with nothing but FS renames (atomic on local fs and HDFS):
-    #
-    #   1. write the rewritten buckets under <path>.__staging__ (a separate
-    #      job — the store itself is only read, never written);
-    #   2. per affected bucket: rename the live dir into <path>.__trash__,
-    #      then rename the staged dir into place;
-    #   3. drop trash + staging.
-    #
-    # Every bucket is wholly old or wholly new at all times. A crash
-    # between the two renames leaves the bucket parked in trash, and
-    # _recover_staged_swap (run at engine construction and before every
-    # swap) renames it back. Cross-bucket transactionality — all buckets
-    # flip together or not at all — still needs a log-backed table format
-    # (Delta; NOTES.md item 5), which slots in at exactly these two
-    # methods.
-
-    def _fs(self):
-        jvm = self.spark.sparkContext._jvm
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(self.path)
-        return jvm, path.getFileSystem(conf)
-
-    def _staging_dir(self) -> str:
-        return self.path.rstrip("/") + ".__staging__"
-
-    def _trash_dir(self) -> str:
-        return self.path.rstrip("/") + ".__trash__"
-
-    def _staged_swap(self, out: DataFrame, affected_buckets: set[int]) -> None:
-        """Write ``out``'s buckets to staging, then atomically flip each
-        affected bucket directory into the store. Buckets absent from
-        ``out`` (all rows deleted) are dropped."""
-        self._recover_staged_swap()  # heal any earlier interrupted swap
-        jvm, fs = self._fs()
-        P = jvm.org.apache.hadoop.fs.Path
-        staging, trash = self._staging_dir(), self._trash_dir()
-        fs.delete(P(staging), True)
-        out.write.mode("overwrite").partitionBy(*self._partition_cols()).parquet(staging)
-        fs.mkdirs(P(trash))
-        for b in sorted(affected_buckets):
-            live, staged = P(f"{self.path}/bucket={b}"), P(f"{staging}/bucket={b}")
-            if fs.exists(live):
-                fs.rename(live, P(f"{trash}/bucket={b}"))
-            if fs.exists(staged):
-                fs.rename(staged, live)
-        fs.delete(P(trash), True)
-        fs.delete(P(staging), True)
-
-    def _recover_staged_swap(self) -> None:
-        """Crash recovery: restore any bucket parked in trash whose live
-        dir is missing (crash between the two renames), then clear
-        leftover staging/trash. Idempotent; cheap when nothing to do."""
-        if not (
-            os.path.exists(self._trash_dir()) or os.path.exists(self._staging_dir())
-        ):
-            return  # fast path without JVM round-trips
-        jvm, fs = self._fs()
-        P = jvm.org.apache.hadoop.fs.Path
-        trash = P(self._trash_dir())
-        if fs.exists(trash):
-            for status in fs.listStatus(trash):
-                name = status.getPath().getName()
-                live = P(f"{self.path}/{name}")
-                if name.startswith("bucket=") and not fs.exists(live):
-                    fs.rename(status.getPath(), live)
-            fs.delete(trash, True)
-        fs.delete(P(self._staging_dir()), True)
+        self._log._commit_rebasing(
+            op,
+            add,
+            [fe.path for fe in files],
+            None,
+            {"from_files": len(files), "to_files": len(add)},
+            base_head=head,
+        )
+        self._retire(self._log, files)
 
     # -- continuous-aggregate rollup (hypertable-rollup analogue) ------------
     # A materialized downsample maintained INCREMENTALLY: each append also
-    # writes the batch's per-(series, bucket) partials — count, scaled-long
-    # sum, min, max, all mergeable — into <path>/_rollup (the underscore
-    # keeps it invisible to the main store's file listing). Reads merge the
-    # partials with one tiny hash aggregate, so queries over a year of
-    # history touch rollup rows, not raw points: the aggregate is computed
-    # once at WRITE time per batch, not per query. Scaled-long sums make
-    # the merge associativity-proof — incremental state is bit-identical
-    # to a full recompute (pinned test). compact() consolidates the delta
+    # commits the batch's per-(series, bucket) partials — count,
+    # scaled-long sum, min, max, all mergeable — to the width's own log
+    # table under <path>/_rollup_<width>. Reads merge the partials with
+    # one tiny hash aggregate, so queries over a year of history touch
+    # rollup rows, not raw points: the aggregate is computed once at
+    # WRITE time per batch, not per query. Scaled-long sums make the
+    # merge associativity-proof — incremental state is bit-identical to a
+    # full recompute (pinned test). compact() consolidates the delta
     # rows; delete() rebuilds (a derived table refresh, standard for
-    # materialized aggregates). A missing/partial rollup dir is never a
-    # correctness risk: rollup() rebuilds it from the points store.
+    # materialized aggregates); both replace the table's files in one
+    # commit, so a failed rewrite leaves the old rollup readable. A
+    # missing rollup table is never a correctness risk before retention:
+    # rollup() rebuilds it from the points store.
 
     def _rollup_dir(self, every_us: int) -> str:
         return os.path.join(self.path, f"_rollup_{every_us}")
+
+    def _rollup_log(self, every_us: int) -> SnapshotLog:
+        return SnapshotLog(self.spark, self._rollup_dir(every_us))
 
     def enable_rollup(self, every_us: int = 3_600_000_000) -> None:
         """Enable rollup maintenance at ``every_us`` bucket width (and
@@ -569,8 +535,8 @@ class TimeSeriesEngine:
             # Refuse BEFORE mutating state: raw points below the floor
             # are gone, so a new width's pre-floor buckets are primary
             # data that never existed — and registering the width first
-            # would leave a phantom entry whose dir can never be built,
-            # failing every later rebuild.
+            # would leave a phantom entry whose table can never be
+            # built, failing every later rebuild.
             raise ValueError(
                 f"cannot enable a new rollup width {every_us} after "
                 f"retention (floor {self.retention_floor_us}): its "
@@ -578,7 +544,7 @@ class TimeSeriesEngine:
                 "rebuilt from dropped raw points"
             )
         self.rollup_widths = sorted(self.rollup_widths + [every_us])
-        if os.path.exists(self.path):
+        if self._log.latest_version() is not None:
             self._write_meta(force=True)
             self.rollup_rebuild(every_us)
 
@@ -600,12 +566,13 @@ class TimeSeriesEngine:
     def _rollup_merge_partials(
         self, partials: DataFrame, every_us: int
     ) -> DataFrame:
-        """Partials at a COARSER nesting width from finer partials
-        (every_us must be a multiple of the finer width). Exact by the
-        same associativity argument as the read-path merge: n and
-        sum_scaled are longs, min/max are order-free — for ts = qW + r
-        with W % f == 0, (ts - ts%f) re-bucketed at W lands on qW, the
-        same bucket the point maps to directly."""
+        """Partials at a COARSER nesting width (or the same width, which
+        just merges rows) from finer partials (every_us must be a
+        multiple of the finer width). Exact by the same associativity
+        argument as the read-path merge: n and sum_scaled are longs,
+        min/max are order-free — for ts = qW + r with W % f == 0,
+        (ts - ts%f) re-bucketed at W lands on qW, the same bucket the
+        point maps to directly."""
         every = F.lit(every_us)
         return partials.groupBy(
             "series",
@@ -636,74 +603,73 @@ class TimeSeriesEngine:
         every = every_us or self.rollup_every_us
         if every not in self.rollup_widths:
             raise ValueError(f"no rollup at width {every}; enabled: {self.rollup_widths}")
-        rdir = self._rollup_dir(every)
-        if os.path.exists(self.path) and not os.path.exists(rdir):
+        if not os.path.exists(self._rollup_dir(every)):
             self.rollup_rebuild(every)  # derived data: absence just means rebuild
-        df = self.spark.read.schema(ROLLUP_SCHEMA).parquet(rdir) \
-            if os.path.exists(rdir) \
-            else self.spark.createDataFrame([], ROLLUP_SCHEMA)
+        log = self._rollup_log(every)
+        df = self._scan(log, ROLLUP_SCHEMA, log.files())
         if ids:
             df = df.where(F.col("series").isin(list(ids)))
         if ts_from is not None:
             df = df.where(F.col("bucket_us") >= ts_from - ts_from % every)
         if ts_to is not None:
             df = df.where(F.col("bucket_us") <= ts_to)
-        merged = df.groupBy("series", "bucket_us").agg(
-            F.sum("n").alias("n"),
-            F.sum("sum_scaled").alias("sum_scaled"),
-            F.min("vmin").alias("value_min"),
-            F.max("vmax").alias("value_max"),
-        )
+        merged = self._rollup_merge_partials(df, every)
         s = F.col("sum_scaled").cast("double") / F.lit(float(ROLLUP_SCALE))
         return merged.select(
             "series",
             "bucket_us",
             "n",
             s.alias("value_sum"),
-            "value_min",
-            "value_max",
+            F.col("vmin").alias("value_min"),
+            F.col("vmax").alias("value_max"),
             (s / F.col("n")).alias("value_mean"),
         )
 
     def rollup_rebuild(self, every_us: int | None = None) -> None:
         """Full refresh from the points store (after delete, or when a
-        rollup dir is lost); None refreshes every enabled width."""
-        if not os.path.exists(self.path):
-            return
-        import shutil
-
-        widths = [every_us] if every_us else self.rollup_widths
-        pts = self.points()
+        rollup table is lost); None refreshes every enabled width. Each
+        width is replaced by one commit, which raises ``CommitConflict``
+        if a rollup append landed since it read the width's table."""
         floor = self.retention_floor_us
-        if floor:
-            # Below the retention floor the rollup rows are PRIMARY data
-            # (their raw points were dropped by apply_retention) — they
-            # cannot be recomputed, only carried forward. Raw points, if
-            # any remain below the floor mid-retention, are excluded so
-            # nothing double-counts.
-            pts = pts.where(F.col("ts") >= floor)
-        for every in widths:
-            rdir = self._rollup_dir(every)
-            tmp = rdir + ".__rebuild__"
-            shutil.rmtree(tmp, ignore_errors=True)
-            fresh = self._rollup_partials(pts, every)
-            if floor:
-                if not os.path.exists(rdir):
+        with self.reading():
+            if self._log.latest_version() is None:
+                return
+            for every in [every_us] if every_us else self.rollup_widths:
+                if floor and not os.path.exists(self._rollup_dir(every)):
                     raise ValueError(
-                        f"rollup dir for width {every} is missing but the "
+                        f"rollup table for width {every} is missing but the "
                         f"retention floor is {floor}: the pre-floor "
                         "aggregates are primary data and cannot be rebuilt "
                         "from raw points (they were dropped). Restore the "
-                        "rollup dir from backup, or enable this width "
+                        "rollup table from backup, or enable this width "
                         "before applying retention."
                     )
-                kept = self.spark.read.schema(ROLLUP_SCHEMA).parquet(rdir).where(
-                    F.col("bucket_us") < floor
+                log = self._rollup_log(every)
+                head = log.latest_version()
+                old = [] if head is None else log.files(head)
+                pts = self.points()
+                if floor:
+                    # Below the retention floor the rollup rows are
+                    # PRIMARY data (their raw points were dropped by
+                    # apply_retention) — they cannot be recomputed, only
+                    # carried forward. Raw points, if any remain below
+                    # the floor mid-retention, are excluded so nothing
+                    # double-counts.
+                    pts = pts.where(F.col("ts") >= floor)
+                fresh = self._rollup_partials(pts, every)
+                if floor:
+                    kept = self._scan(log, ROLLUP_SCHEMA, old)
+                    fresh = kept.where(F.col("bucket_us") < floor).unionByName(fresh)
+                log._commit(
+                    "overwrite",
+                    log._write_files(fresh),
+                    [fe.path for fe in old],
+                    None,
+                    {},
+                    expected_version=0 if head is None else head + 1,
+                    retry_append=False,
                 )
-                fresh = kept.unionByName(fresh)
-            fresh.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(rdir, ignore_errors=True)
-            os.rename(tmp, rdir)
+                self._retire(log, old)
 
     def apply_retention(self, older_than_us: int) -> None:
         """Data-lifecycle retention (the TimescaleDB drop_chunks +
@@ -722,9 +688,9 @@ class TimeSeriesEngine:
           BEFORE any raw row is dropped;
         - below the new floor, rollup rows become PRIMARY data:
           ``rollup_rebuild`` carries them forward instead of
-          recomputing (and refuses to run if the rollup dir vanished);
-          ``enable_rollup`` for a NEW width after retention refuses for
-          the same reason;
+          recomputing (and refuses to run if the rollup table
+          vanished); ``enable_rollup`` for a NEW width after retention
+          refuses for the same reason;
         - raw reads (last/first/since/range) only see ``ts >= cutoff``
           afterwards; ``aggregate_range`` keeps answering over the
           dropped range from the rollup route.
@@ -750,7 +716,7 @@ class TimeSeriesEngine:
                 f"enabled rollup widths {misaligned}: a straddling bucket "
                 "would mix dropped and kept points"
             )
-        if not os.path.exists(self.path):
+        if self._log.latest_version() is None:
             return
         # materialize every width from the still-complete raw store,
         # then pin the floor BEFORE dropping rows (a crash between the
@@ -763,27 +729,29 @@ class TimeSeriesEngine:
 
     def _rollup_consolidate(self) -> None:
         """Merge accumulated per-append delta rows to one row per
-        (series, bucket) in every width: the rollup's own compaction."""
-        import shutil
-
-        for every in self.rollup_widths:
-            rdir = self._rollup_dir(every)
-            if not os.path.exists(rdir):
-                continue
-            df = self.spark.read.schema(ROLLUP_SCHEMA).parquet(rdir)
-            merged = df.groupBy("series", "bucket_us").agg(
-                F.sum("n").alias("n"),
-                F.sum("sum_scaled").alias("sum_scaled"),
-                F.min("vmin").alias("vmin"),
-                F.max("vmax").alias("vmax"),
-            )
-            tmp = rdir + ".__rebuild__"
-            shutil.rmtree(tmp, ignore_errors=True)
-            merged.select(*[f.name for f in ROLLUP_SCHEMA.fields]).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            shutil.rmtree(rdir, ignore_errors=True)
-            os.rename(tmp, rdir)
+        (series, bucket) in every width: the rollup's own compaction,
+        one commit per width that keeps concurrently appended partials."""
+        with self.reading():
+            for every in self.rollup_widths:
+                if not os.path.exists(self._rollup_dir(every)):
+                    continue
+                log = self._rollup_log(every)
+                head = log.latest_version()
+                if head is None:
+                    continue
+                old = log.files(head)
+                merged = self._rollup_merge_partials(
+                    self._scan(log, ROLLUP_SCHEMA, old), every
+                )
+                log._commit_rebasing(
+                    "compact",
+                    log._write_files(merged),
+                    [fe.path for fe in old],
+                    None,
+                    {},
+                    base_head=head,
+                )
+                self._retire(log, old)
 
     # -- compaction (A4 analogue) -------------------------------------------
 
@@ -796,21 +764,20 @@ class TimeSeriesEngine:
         split deterministically by series hash within each bucket, so
         each file still holds contiguous (series, ts) runs and row-group
         pruning stays tight. Appends between compactions create small
-        files; this job re-tightens the layout.
-
-        Durability: staged bucket swap (see _staged_swap) — every bucket
-        directory is wholly old or wholly new at any instant; an
-        interrupted swap is healed on the next engine construction."""
-        if not os.path.exists(self.path):
-            return  # empty store: nothing to compact
-        store = self._store()
-        affected = {r["bucket"] for r in store.select("bucket").distinct().collect()}
-        if files_per_bucket > 1:
-            split = F.pmod(F.xxhash64("series"), F.lit(files_per_bucket))
-            out = store.repartition(
-                self.num_buckets * files_per_bucket, "bucket", split
-            )
-        else:
-            out = store.repartition("bucket")
-        self._staged_swap(out.sortWithinPartitions("series", "ts"), affected)
-        self._rollup_consolidate()
+        files; this job re-tightens the layout. One commit swaps the
+        whole store; appends that land meanwhile stay live."""
+        with self.reading():
+            head = self._log.latest_version()
+            files = [] if head is None else self._log.files(head)
+            if not files:
+                return  # empty store: nothing to compact
+            store = self._partitioned(self._scan(self._log, POINT_SCHEMA, files))
+            if files_per_bucket > 1:
+                split = F.pmod(F.xxhash64("series"), F.lit(files_per_bucket))
+                out = store.repartition(
+                    self.num_buckets * files_per_bucket, "bucket", split
+                )
+            else:
+                out = store.repartition("bucket")
+            self._rewrite("compact", head, files, out)
+            self._rollup_consolidate()

@@ -349,20 +349,6 @@ def minhash_rows(
     return sh_rows.groupBy("id").agg(*aggs)
 
 
-def lsh_candidate_pairs_fast(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = DEFAULT_SHINGLE_N,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-) -> DataFrame:
-    """Row-oriented LSH banding (same semantics as lsh_candidate_pairs)."""
-    sh = shingle_rows(docs, id_col=id_col, text_col=text_col, n=shingle_n)
-    return _lsh_candidates_from_sh(sh, num_hashes, band_size)
-
-
 def _band_rows(sh: DataFrame, num_hashes: int, band_size: int) -> DataFrame:
     """(id, band, bucket) LSH band rows from shingle rows: the banded
     signature table both the in-plan pipeline and the persisted index
@@ -371,20 +357,6 @@ def _band_rows(sh: DataFrame, num_hashes: int, band_size: int) -> DataFrame:
     structs = _band_struct_sql(num_hashes, band_size)
     return sig.selectExpr("id", f"explode(array({structs})) AS bb").select(
         "id", "bb.band", "bb.bucket"
-    )
-
-
-def _lsh_candidates_from_sh(
-    sh: DataFrame, num_hashes: int, band_size: int
-) -> DataFrame:
-    bands = _band_rows(sh, num_hashes, band_size)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
     )
 
 

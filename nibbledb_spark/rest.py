@@ -373,7 +373,10 @@ class Router:
 
     def handle(self, method: str, path: str, body: str | None = None) -> tuple[int, str]:
         try:
-            result = self._dispatch(method.upper(), _split_path(path), body)
+            # plan and collect under the engine's read hold: files a
+            # concurrent delete or compact replaces outlive this request
+            with self.engine.reading():
+                result = self._dispatch(method.upper(), _split_path(path), body)
         except (RouteError, ValueError, IndexError) as e:
             # ValueError/IndexError: malformed numeric path segments
             # (GET /ts/x/last/abc) — the reference's Failure catch-all

@@ -25,7 +25,8 @@ both, the way lakehouse formats do it:
   bottleneck, exactly the problem Delta's parquet checkpoints solve.
 - **File stats / data skipping**: each added file carries
   ``rows`` + per-column ``min``/``max`` for the configured stats
-  columns, collected at write time. ``files(predicate_bounds=...)``
+  columns, read from the new files' parquet footers at write time
+  (partition columns record their path value). ``files(bounds=...)``
   prunes the file list driver-side before Spark ever opens a footer —
   the reference's shard-index ``overlap`` check
   (``src/index.re:92-105``) generalized to any column.
@@ -44,19 +45,22 @@ counts, min/max scalars) — a 1e6-file table is a ~100 MB log fully
 checkpointed, read by the driver once per query. Data files never
 rewrite on append; delete/compact rewrite only affected files and
 commit the swap atomically, so readers at any version see a consistent
-set (no torn reads during compaction — the staged-swap problem
-``engine._staged_swap`` solves per-bucket, solved here globally).
+set (no torn reads during compaction). The time-series engine's store
+and its rollups are tables of this format (``engine.TimeSeriesEngine``).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -144,6 +148,14 @@ def _stat(v):
     return str(v)
 
 
+def _unlink_data_file(path: str) -> None:
+    """Remove a data file and the Hadoop checksum file beside it."""
+    d, name = os.path.split(path)
+    for p in (path, os.path.join(d, f".{name}.crc")):
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(p)
+
+
 def _entry_name(version: int) -> str:
     return f"{version:020d}.json"
 
@@ -156,8 +168,10 @@ class SnapshotLog:
     """Versioned parquet table rooted at ``root`` (local or shared FS).
 
     ``stats_cols``: columns to record per-file min/max for (data
-    skipping). ``checkpoint_every``: commits between live-set
-    checkpoints.
+    skipping). ``partition_cols``: columns the data files are
+    hive-partitioned by; each file's entry records its partition values
+    as single-point stats. ``checkpoint_every``: commits between
+    live-set checkpoints.
     """
 
     def __init__(
@@ -166,12 +180,14 @@ class SnapshotLog:
         root: str,
         *,
         stats_cols: tuple[str, ...] = (),
+        partition_cols: tuple[str, ...] = (),
         checkpoint_every: int = 10,
         target_file_bytes: int = 32 << 20,
     ) -> None:
         self.spark = spark
         self.root = os.path.abspath(root)
         self.stats_cols = tuple(stats_cols)
+        self.partition_cols = tuple(partition_cols)
         self.checkpoint_every = max(2, int(checkpoint_every))
         # optimizeWrite target (0 disables): small commits coalesce to
         # ~this many bytes per file instead of fragmenting the table
@@ -312,18 +328,17 @@ class SnapshotLog:
     def _write_files(
         self, df: DataFrame, *, optimize: bool = True
     ) -> list[FileEntry]:
-        """Materialize ``df`` as immutable parquet files under data/ and
-        collect per-file stats in ONE metadata pass over the fresh files.
-
-        The stats scan groups by ``input_file_name()`` on the pre-shuffle
-        frame (it is empty above the first exchange) — same pattern as
-        the engine's index endpoint. Cost: one read of just-written data,
-        the price the reference pays too (its index update walks the new
-        shard's points, src/timeseries.re:119-135).
-        """
-        sub = os.path.join(_DATA_DIR, f"b-{uuid.uuid4().hex}")
-        out = os.path.join(self.root, sub)
-        df.write.mode("errorifexists").parquet(out)
+        """Materialize ``df`` as immutable parquet files under data/
+        (hive-partitioned by ``partition_cols``) and return their entries.
+        Stats come from the files' parquet footers, read on the driver
+        (no Spark job re-reads the commit), and partition values from
+        their paths; a column without footer statistics records none,
+        which :meth:`_prune` keeps. Empty files are unlinked."""
+        out = os.path.join(self.root, _DATA_DIR, f"b-{uuid.uuid4().hex}")
+        writer = df.write.mode("errorifexists")
+        if self.partition_cols:
+            writer = writer.partitionBy(*self.partition_cols)
+        writer.parquet(out)
         # optimizeWrite (Delta's analogue): a small commit inherits its
         # frame's partitioning — a 1000-row batch from a 32-way frame
         # leaves 32 ~kB files, and a table written by many small commits
@@ -338,34 +353,46 @@ class SnapshotLog:
         # clustering a write for stats pruning (Z-order) means the
         # multi-file layout — same opt-out Delta's optimizeWrite has.
         if optimize:
-            sub, out = self._coalesce_small_write(sub, out)
-        back = self.spark.read.parquet(out)
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in self.stats_cols:
-            if c in back.columns:
-                aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-        rows = (
-            back.groupBy(F.input_file_name().alias("__file")).agg(*aggs).collect()
-        )
+            out = self._coalesce_small_write(out)
         entries = []
-        for r in rows:
-            full = r["__file"]
-            rel = os.path.join(sub, os.path.basename(full))
-            stats = {}
-            for c in self.stats_cols:
-                if f"__mn_{c}" in r.asDict():
-                    stats[c] = [_stat(r[f"__mn_{c}"]), _stat(r[f"__mx_{c}"])]
-            entries.append(FileEntry(rel, r["__rows"], stats))
+        for dirpath, _dirs, names in os.walk(out):
+            rel_dir = os.path.relpath(dirpath, out)
+            parts = dict(p.split("=", 1) for p in rel_dir.split(os.sep) if "=" in p)
+            for name in names:
+                full = os.path.join(dirpath, name)
+                if not name.endswith(".parquet") or name.startswith((".", "_")):
+                    continue
+                md = pq.read_metadata(full)
+                if md.num_rows == 0:
+                    _unlink_data_file(full)
+                    continue
+                col_of = {md.schema.column(i).path: i for i in range(md.num_columns)}
+                stats: dict[str, list] = {}
+                for c in (c for c in self.stats_cols if c in col_of):
+                    cs = [md.row_group(g).column(col_of[c]).statistics
+                          for g in range(md.num_row_groups)]
+                    if all(st is not None and st.has_min_max for st in cs):
+                        stats[c] = [_stat(min(st.min for st in cs)),
+                                    _stat(max(st.max for st in cs))]
+                for c in self.partition_cols:
+                    v = unquote(parts[c])
+                    if v == "__HIVE_DEFAULT_PARTITION__":
+                        v = None
+                    elif isinstance(df.schema[c].dataType, T.IntegralType):
+                        v = int(v)
+                    stats[c] = [v, v]
+                rel = os.path.relpath(full, self.root)
+                entries.append(FileEntry(rel, md.num_rows, stats))
         return sorted(entries, key=lambda fe: fe.path)
 
-    def _coalesce_small_write(self, sub: str, out: str) -> tuple[str, str]:
+    def _coalesce_small_write(self, out: str) -> str:
         """Rewrite a just-written commit directory to its target file
         count when it fragmented (see _write_files). Local-FS listing;
         an object-store deployment reads the same sizes from the
         writer's task summaries. No-op when disabled, single-file, or
         already at/below the target count."""
         if self.target_file_bytes <= 0:
-            return sub, out
+            return out
         try:
             files = [
                 f
@@ -374,12 +401,11 @@ class SnapshotLog:
             ]
             total = sum(os.path.getsize(os.path.join(out, f)) for f in files)
         except OSError:
-            return sub, out
+            return out
         want = max(1, -(-total // self.target_file_bytes))  # ceil div
         if len(files) <= 1 or want >= len(files):
-            return sub, out
-        sub2 = os.path.join(_DATA_DIR, f"b-{uuid.uuid4().hex}")
-        out2 = os.path.join(self.root, sub2)
+            return out
+        out2 = os.path.join(self.root, _DATA_DIR, f"b-{uuid.uuid4().hex}")
         (
             self.spark.read.parquet(out)
             .coalesce(want)
@@ -387,7 +413,7 @@ class SnapshotLog:
             .parquet(out2)
         )
         shutil.rmtree(out, ignore_errors=True)
-        return sub2, out2
+        return out2
 
     def _commit(
         self,
@@ -760,6 +786,12 @@ class SnapshotLog:
         best = cached if found is None else found
         self._stream_marker_cache[stream_id] = (head, best)
         return best
+
+    def _replayed(self, marker: dict) -> bool:
+        """Whether ``marker``'s micro-batch (the ``stream_batch_id`` /
+        ``stream_id`` commit meta) is already committed here."""
+        last = self.last_stream_batch_id(marker["stream_id"])
+        return last is not None and marker["stream_batch_id"] <= last
 
     def overwrite(self, df: DataFrame, *, optimize_write: bool = True) -> int:
         """Replace the whole live set with ``df`` in one atomic commit.
@@ -1544,13 +1576,9 @@ class SnapshotLog:
         """
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            last = self.last_stream_batch_id(stream_id)
-            if last is not None and batch_id <= last:
-                return  # replayed micro-batch: already committed
-            self.append(
-                batch_df,
-                meta={"stream_batch_id": int(batch_id), "stream_id": stream_id},
-            )
+            marker = {"stream_batch_id": int(batch_id), "stream_id": stream_id}
+            if not self._replayed(marker):
+                self.append(batch_df, meta=marker)
 
         return sink
 
@@ -1571,8 +1599,8 @@ class SnapshotLog:
         """
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            last = self.last_stream_batch_id(stream_id)
-            if last is not None and batch_id <= last:
+            marker = {"stream_batch_id": int(batch_id), "stream_id": stream_id}
+            if self._replayed(marker):
                 return
             from pyspark.sql import Window
 
@@ -1597,11 +1625,7 @@ class SnapshotLog:
             if self.latest_version() is not None:
                 seen = self.read().withColumn("__k", F.expr(key_expr)).select("__k")
                 first = first.join(seen, "__k", "left_anti")
-            novel = first.drop("__k")
-            self.append(
-                novel,
-                meta={"stream_batch_id": int(batch_id), "stream_id": stream_id},
-            )
+            self.append(first.drop("__k"), meta=marker)
 
         return sink
 
@@ -1685,6 +1709,7 @@ class SnapshotLog:
             self.spark,
             dest_root,
             stats_cols=self.stats_cols,
+            partition_cols=self.partition_cols,
             checkpoint_every=self.checkpoint_every,
             target_file_bytes=self.target_file_bytes,
         )

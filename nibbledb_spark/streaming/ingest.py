@@ -14,10 +14,11 @@ Mapping:
   (src/timeseries.re:119-156) — therefore the ingest path uses NO
   watermark by default; windowed aggregations accept one explicitly.
 
-The sink is ``foreachBatch`` -> ``TimeSeriesEngine.append_points`` —
-the same bucket-partitioned store batch writes use, so batch and
-streaming ingest converge to identical state (the STREAM parity class
-convergence tests pin this).
+The sink is ``foreachBatch`` -> ``TimeSeriesEngine.streaming_sink`` —
+the same append commits batch writes use, so batch and streaming ingest
+converge to identical state (the STREAM parity class convergence tests
+pin this). The micro-batch id rides in each commit, so a batch that
+Structured Streaming re-runs after a crash is appended once.
 
 The micro-batch model and the batch/streaming plan-equivalence this
 module leans on are the Structured Streaming design (SIGMOD 2018,
@@ -26,6 +27,8 @@ guarantee exercised end-to-end.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,9 +128,9 @@ class StreamingIngest:
                 .drop("__ts")
             )
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            self.engine.append_points(batch_df)
-
+        # exactly once across a sink replay: the epoch id rides in the
+        # engine's commits, keyed by this query's checkpoint location
+        sink = self.engine.streaming_sink(os.path.abspath(self.checkpoint_dir))
         self._query = (
             stream.writeStream.foreachBatch(sink)
             .option("checkpointLocation", self.checkpoint_dir)

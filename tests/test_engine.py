@@ -135,15 +135,14 @@ def test_index_manifest(engine):
 def test_compaction_file_sizing(spark, engine):
     """Appends create one file per bucket per write; compact() merges
     them, and files_per_bucket>1 splits deterministically by series hash
-    (file-size bound at scale) — results invariant throughout."""
-    import glob
-
+    (file-size bound at scale) — results invariant throughout. Live
+    files are counted from the manifest."""
     for i in range(4):  # 4 small appends
         engine.write("butterflies", WIRE_BUTTERFLIES[2 * i : 2 * i + 2])
     engine.write("honeybees", [{"timestamp": t, "value": v} for (_, t, _, v) in HONEYBEES])
 
     def n_files():
-        return len(glob.glob(f"{engine.path}/bucket=*/day=*/part-*.parquet"))
+        return len(engine._log.files())
 
     before_rows = sorted(
         (r["series"], r["ts"], r["value"]) for r in engine.points().collect()
@@ -172,54 +171,156 @@ def test_store_bucket_count_is_sticky(spark, tmp_path):
     assert reopened.last(["butterflies"], 1).count() == 1
 
 
-def test_staged_swap_crash_recovery(spark, tmp_path):
-    """A crash between the two renames of the staged bucket swap parks
-    the live bucket dir in trash. Engine construction must rename it
-    back (the interrupted delete simply never happened) and clear the
-    staging/trash remnants."""
-    import os
-    import shutil
-
-    from nibbledb_spark.engine import TimeSeriesEngine
-
-    store = str(tmp_path / "store")
-    eng = TimeSeriesEngine(spark, store, num_buckets=4)
-    eng.write("crashy", [{"timestamp": 1000 + i, "value": float(i)} for i in range(8)])
-    before = eng.length(["crashy"])
-    assert before == 8
-
-    # simulate the torn state: live bucket dir moved to trash, staging
-    # left behind, live dir gone
-    b = eng._bucket_py("crashy")
-    live = os.path.join(store, f"bucket={b}")
-    trash = eng._trash_dir()
-    os.makedirs(trash, exist_ok=True)
-    shutil.move(live, os.path.join(trash, f"bucket={b}"))
-    os.makedirs(eng._staging_dir(), exist_ok=True)
-    assert not os.path.exists(live)  # the torn state is real
-
-    healed = TimeSeriesEngine(spark, store)
-    assert healed.length(["crashy"]) == before
-    assert not os.path.exists(eng._trash_dir())
-    assert not os.path.exists(eng._staging_dir())
-
-
-def test_staged_swap_leaves_no_remnants(spark, tmp_path):
-    """Successful delete/compact leaves no staging or trash dirs."""
+def _parquet_under(path):
     import os
 
+    return {
+        os.path.relpath(os.path.join(d, n), path)
+        for d, _, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet")
+    }
+
+
+def _two_bucket_engine(spark, path):
+    """An engine whose series s1 and s2 hash to different buckets."""
     from nibbledb_spark.engine import TimeSeriesEngine
 
+    eng = TimeSeriesEngine(spark, path, num_buckets=4)
+    ids = [f"s{i}" for i in range(1, 20)]
+    second = next(s for s in ids if eng._bucket_py(s) != eng._bucket_py("s1"))
+    eng.write("s1", [{"timestamp": 1000 + i, "value": float(i)} for i in range(8)])
+    eng.write(second, [{"timestamp": 2000 + i, "value": float(i)} for i in range(8)])
+    return eng, ["s1", second]
+
+
+def test_delete_failing_before_commit_keeps_every_row(spark, tmp_path, monkeypatch):
+    """A delete across two buckets that fails after writing its new
+    files and before its commit changes nothing: every row stays
+    readable, through this engine and a reopened one."""
+    from nibbledb_spark.engine import TimeSeriesEngine
+    from nibbledb_spark.snapshots import SnapshotLog
+
     store = str(tmp_path / "store")
-    eng = TimeSeriesEngine(spark, store, num_buckets=4)
-    eng.write("s1", [{"timestamp": 1000 + i, "value": float(i)} for i in range(6)])
-    eng.write("s2", [{"timestamp": 2000 + i, "value": float(i)} for i in range(6)])
+    eng, ids = _two_bucket_engine(spark, store)
+    before = sorted(eng.points().collect())
+    written = []
+    real_write = SnapshotLog._write_files
+
+    def record(self, *a, **k):
+        out = real_write(self, *a, **k)
+        written.extend(out)
+        return out
+
+    def crash(self, *a, **k):
+        assert written, "the delete's files are written before its commit"
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(SnapshotLog, "_write_files", record)
+    monkeypatch.setattr(SnapshotLog, "_commit_rebasing", crash)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        eng.delete(ids, 1000, 2003)
+    monkeypatch.undo()
+    assert sorted(eng.points().collect()) == before
+    assert sorted(TimeSeriesEngine(spark, store).points().collect()) == before
+
+
+def test_read_resolved_before_delete_sees_old_rows(spark, tmp_path):
+    """A read planned before a delete commits and collected after it
+    returns the old snapshot's rows without error; the replaced files
+    go once the read is done."""
+    eng, ids = _two_bucket_engine(spark, str(tmp_path / "store"))
+    with eng.reading():
+        old = eng.points(ids)
+        eng.delete(ids, 1000, 2003)
+        assert old.count() == 16
+        assert eng.length(ids) == 4
+    live = {fe.path for fe in eng._log.files()}
+    assert _parquet_under(eng.path) == live
+
+
+def test_flush_during_delete_survives(spark, tmp_path, monkeypatch):
+    """A flush into a bucket that a delete is rewriting, landing after
+    the delete read its survivors, stays in the store."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    eng, ids = _two_bucket_engine(spark, str(tmp_path / "store"))
+    real_parquet = DataFrameWriter.parquet
+    state = {"armed": True}
+
+    def parquet(self, *a, **k):
+        real_parquet(self, *a, **k)
+        if state.pop("armed", False):  # the delete's own write, once
+            eng.write("s1", [{"timestamp": 5000, "value": 1.0}])
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    eng.delete(["s1"], 1000, 1003)
+    monkeypatch.undo()
+    assert not state
+    assert sorted(r["ts"] for r in eng.points(["s1"]).collect()) == [
+        1004, 1005, 1006, 1007, 5000
+    ]
+
+
+def test_rewrites_leave_no_unreferenced_files(spark, tmp_path):
+    """After a delete and a compact with no read in flight, every
+    .parquet under the store — points and rollup tables — is a live
+    file of its table's manifest."""
+    import os
+
+    eng, ids = _two_bucket_engine(spark, str(tmp_path / "store"))
+    eng.enable_rollup(3_600_000_000)
+    eng.write(ids[1], [{"timestamp": 3000 + i, "value": float(i)} for i in range(4)])
+
+    def live():
+        logs = [eng._log] + [eng._rollup_log(w) for w in eng.rollup_widths]
+        return {
+            os.path.relpath(os.path.join(log.root, fe.path), eng.path)
+            for log in logs
+            for fe in log.files()
+        }
+
     eng.delete(["s1"], 1000, 1002)
-    assert eng.length(["s1"]) == 3 and eng.length(["s2"]) == 6
+    assert eng.length(["s1"]) == 5 and eng.length([ids[1]]) == 12
+    assert _parquet_under(eng.path) == live()
     eng.compact()
-    assert eng.length(["s1"]) == 3 and eng.length(["s2"]) == 6
-    assert not os.path.exists(eng._staging_dir())
-    assert not os.path.exists(eng._trash_dir())
+    assert eng.length(["s1"]) == 5 and eng.length([ids[1]]) == 12
+    assert _parquet_under(eng.path) == live()
+
+
+def test_bucket_directory_store_without_log_is_refused(spark, tmp_path):
+    from nibbledb_spark.engine import TimeSeriesEngine
+
+    (tmp_path / "old" / "bucket=0" / "day=1").mkdir(parents=True)
+    with pytest.raises(ValueError, match="no snapshot log"):
+        TimeSeriesEngine(spark, str(tmp_path / "old"))
+
+
+def test_failed_meta_rewrite_keeps_bucket_count(spark, tmp_path, monkeypatch):
+    """A failure while enable_rollup rewrites the store's metadata must
+    leave the old metadata whole: a reopen with the wrong bucket count
+    still reads every row."""
+    import json
+
+    from nibbledb_spark.engine import TimeSeriesEngine
+
+    path = str(tmp_path / "meta")
+    eng = TimeSeriesEngine(spark, path, num_buckets=8)
+    eng.write("butterflies", WIRE_BUTTERFLIES)
+    real_dump = json.dump
+
+    def dump(obj, fp, *a, **k):
+        if "_nibbledb_meta.json" in getattr(fp, "name", ""):
+            raise OSError("disk full")
+        return real_dump(obj, fp, *a, **k)
+
+    monkeypatch.setattr(json, "dump", dump)
+    with pytest.raises(OSError, match="disk full"):
+        eng.enable_rollup(3_600_000_000)
+    monkeypatch.undo()
+    reopened = TimeSeriesEngine(spark, path, num_buckets=32)  # wrong arg
+    assert reopened.num_buckets == 8
+    assert reopened.length(["butterflies"]) == 8
 
 
 # ---------------------------------------------------------------------------
@@ -293,15 +394,12 @@ def test_rollup_incremental_equals_recompute(spark, tmp_path):
 
     eng.compact()  # consolidates delta rows to one per (series, bucket)
     assert _rollup_dict(eng) == _recompute_rollup(eng)
-    rdir = eng._rollup_dir(eng.rollup_every_us)
-    import glob as g
-    n_files = len(g.glob(rdir + "/part-*.parquet"))
-    df = spark.read.parquet(rdir)
+    df = eng._rollup_log(eng.rollup_every_us).read()
     assert df.count() == df.select("series", "bucket_us").distinct().count()
 
-    # rollup is derived data: losing the dir is repaired on next read
+    # rollup is derived data: losing its table is repaired on next read
     import shutil
-    shutil.rmtree(rdir)
+    shutil.rmtree(eng._rollup_dir(eng.rollup_every_us))
     assert _rollup_dict(eng) == _recompute_rollup(eng)
 
     # the width survives reopen via store meta
@@ -468,3 +566,43 @@ def test_retention_drops_raw_keeps_rollup_aggregates(spark, tmp_path):
     with pytest.raises(ValueError, match="primary data"):
         eng.rollup_rebuild(HOUR)
     assert not os.path.exists(eng._rollup_dir(HOUR))
+
+
+def test_failed_rollup_rewrite_keeps_pre_floor_aggregates(spark, tmp_path, monkeypatch):
+    """After retention the pre-floor rollup rows are primary data. A
+    rollup rewrite (rebuild or consolidation) that fails after writing
+    its new files and before they become visible must leave them
+    answering."""
+    from nibbledb_spark.engine import TimeSeriesEngine
+    from nibbledb_spark.schema import POINT_SCHEMA
+    from nibbledb_spark.snapshots import SnapshotLog
+
+    HOUR = 3_600_000_000
+    eng = TimeSeriesEngine(spark, str(tmp_path / "store"), num_buckets=2)
+    eng.enable_rollup(HOUR)
+    rows = [("s", h * HOUR + j * 600_000_000, None, float(h * 10 + j))
+            for h in range(4) for j in range(6)]
+    eng.append_points(spark.createDataFrame(rows, POINT_SCHEMA))
+    eng.apply_retention(2 * HOUR)
+    pre = eng.aggregate_range(["s"], 0, 2 * HOUR - 1, "sum")
+    assert pre == {"sum": float(sum(h * 60 + 15 for h in range(2)))}
+
+    rollup_root = eng._rollup_log(HOUR).root
+    real = {n: getattr(SnapshotLog, n) for n in ("_commit", "_commit_rebasing")}
+
+    def failing(name):
+        def commit(self, *a, **k):
+            if self.root == rollup_root:
+                raise RuntimeError("crash before the rollup commit")
+            return real[name](self, *a, **k)
+        return commit
+
+    for name in real:
+        monkeypatch.setattr(SnapshotLog, name, failing(name))
+    for rewrite in (eng.rollup_rebuild, eng.compact):
+        with pytest.raises(RuntimeError, match="crash before the rollup commit"):
+            rewrite()
+        assert eng.aggregate_range(["s"], 0, 2 * HOUR - 1, "sum") == pre
+    monkeypatch.undo()
+    assert TimeSeriesEngine(spark, eng.path).aggregate_range(
+        ["s"], 0, 2 * HOUR - 1, "sum") == pre

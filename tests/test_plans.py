@@ -59,13 +59,14 @@ def test_time_range_filter_is_pushed(store_engine):
 
 
 def test_series_read_prunes_buckets(store_engine):
-    """Reading one series must touch only its hash bucket's directory
-    (partition pruning from the derived bucket predicate)."""
+    """Reading one series must touch only its hash bucket's files (the
+    manifest prunes the snapshot's file list by each file's bucket)."""
     df = store_engine.points(["s1"])
-    p = plan(df)
-    assert "PartitionFilters" in p
     b = store_engine._bucket_py("s1")
-    assert f"bucket#" in p or f"EqualTo(bucket,{b})" in p or f"bucket IN ({b})" in p or "isnotnull(bucket" in p
+    files = {
+        r["f"] for r in df.select(F.input_file_name().alias("f")).distinct().collect()
+    }
+    assert files and all(f"/bucket={b}/" in f for f in files), files
     # the partition count actually read must be 1 of 8
     scanned = df.select(F.spark_partition_id()).distinct()
     assert scanned.count() <= 2
@@ -231,11 +232,10 @@ def test_winnow_relational_plan_shape(spark):
 
 
 def test_day_partition_prunes_time_ranges(spark, tmp_path_factory):
-    """Layout v2: ts bounds derive day-partition predicates that prune
-    whole day directories BEFORE any file opens — and unlike row-group
-    ts stats, that pruning survives compaction (a merged bucket file
-    spans the full history; the day dirs still bound the scan to the
-    window queried)."""
+    """ts bounds prune the snapshot's file list by each file's ts stats
+    BEFORE any file opens — and because files are written per day,
+    that pruning survives compaction (a merged bucket still spans one
+    file per day, so the scan stays bounded to the window queried)."""
     from nibbledb_spark.engine import DAY_US, TimeSeriesEngine
     from nibbledb_spark.schema import POINT_SCHEMA
 
@@ -252,9 +252,6 @@ def test_day_partition_prunes_time_ranges(spark, tmp_path_factory):
     eng.compact()
 
     df = eng.range(["s"], t0 + 3 * DAY_US, t0 + 4 * DAY_US)
-    p = plan(df)
-    assert "PartitionFilters" in p
-    assert "day" in p.split("PartitionFilters")[1].split("]")[0]
     assert df.count() == 6  # all of day 3 (5 pts) + the day-4 boundary point
 
     # physical proof: only the two matching day directories are read

@@ -87,36 +87,6 @@ def test_salted_left_join_keeps_unmatched(spark):
     assert rows == [("a", 1, 10.0), ("a", 2, 10.0), ("zz", 3, None)]
 
 
-def test_dynamic_partition_pruning_on_store(spark, tmp_path):
-    """Joining the day-partitioned store (layout v2) against a small
-    filtered dim must inject a dynamicpruning expression into the scan's
-    PartitionFilters — at 100 TB this is the difference between scanning
-    two day directories and scanning the table; the pruning comes from
-    the partition layout, no engine code involved."""
-    from nibbledb_spark.engine import DAY_US, TimeSeriesEngine
-
-    eng = TimeSeriesEngine(spark, str(tmp_path / "store"))
-    rows = [
-        ("s%d" % (i % 3), d * DAY_US + i * 1000, {"k": "v"}, float(i))
-        for d in range(6)
-        for i in range(20)
-    ]
-    eng.append_points(
-        spark.createDataFrame(
-            rows, "series string, ts long, tag map<string,string>, value double"
-        )
-    )
-    dim = (
-        spark.range(0, 6)
-        .select(F.col("id").cast("int").alias("day"), (F.col("id") * 10).alias("p"))
-        .where("p >= 20 AND p < 40")  # selective predicate: DPP's trigger
-    )
-    joined = eng._store().join(F.broadcast(dim), "day")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan
-    assert joined.count() == 40
-
-
 def test_zorder_prunes_both_dimensions(spark, tmp_path):
     """Write the same (x, y) grid linearly sorted and Z-ordered into two
     snapshot logs; file stats must prune a trailing-dimension predicate

@@ -151,6 +151,35 @@ def test_replay_restart_is_exactly_once(spark, tmp_path, batch_points):
     assert eng.points().count() == n1  # no duplicates on restart
 
 
+def test_sink_replay_after_crash_is_exactly_once(spark, tmp_path, batch_points):
+    """Structured Streaming re-runs a micro-batch whose sink finished
+    but whose checkpoint commit did not. The engine's sink must skip an
+    epoch it already committed: invoked twice with one epoch id, and on
+    a restart whose checkpoint lost the last batch's commit record."""
+    import os
+
+    eng = TimeSeriesEngine(spark, str(tmp_path / "store"), num_buckets=4)
+    ckpt = tmp_path / "ckpt"
+    ingest = StreamingIngest(eng, str(ckpt))
+    ingest.start_replay(SF)
+    ingest.sync()
+    n1 = eng.points().count()
+    assert n1 == batch_points.count()
+    last = max(int(n) for n in os.listdir(ckpt / "commits") if n.isdigit())
+    for name in (str(last), f".{last}.crc"):  # crash before the commit record
+        (ckpt / "commits" / name).unlink(missing_ok=True)
+    ingest2 = StreamingIngest(eng, str(ckpt))
+    ingest2.start_replay(SF)
+    ingest2.sync()
+    assert eng.points().count() == n1
+
+    eng = TimeSeriesEngine(spark, str(tmp_path / "store2"), num_buckets=4)
+    sink = eng.streaming_sink("replayed")
+    sink(batch_points, 0)
+    sink(batch_points, 0)
+    assert eng.points().count() == n1
+
+
 def test_watermark_drops_late_data_but_default_keeps_it(spark, tmp_path):
     """Late-data policy (SURVEY.md §7.3): with an explicit watermark,
     points older than the lateness bound arriving in a later micro-batch
